@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.kg._
 import graft.align.{GatKernel, GatWeights, MoCoTrainer}
-import graft.candidates.{BucketIndex, IndexGeometry, ScoredTopK}
+import graft.candidates.{BlockedTopK, BucketIndex, IndexGeometry, ScoredTopK}
 import graft.candidates.BucketIndex.IndexRow
 import graft.candidates.ScoredTopK.ScoredQuery
 import graft.canon.ConnectedComponents
@@ -360,18 +360,10 @@ object IncrementalAlign {
     val bcSample = spark.sparkContext.broadcast(sample)
     val ix = cut(corpusDs.flatMap(e => BucketIndex.rowsOf(e.id, e.emb, bcG.value)))
     ix.count()
-    val scored = BucketIndex.cogroupTopK(queries, ix, g, kPrime, cfg.indexCellCap)
-    val hit = scored.map { case (id, emb, ids, cs, cands) =>
-      ScoredTopK.finish(id, emb, ids, cs, bcSample.value, tau, cands <= kPrime)
-    }
-    val miss = queries.toDF("id", "emb")
-      .join(scored.map(_._1).toDF("id"), Seq("id"), "left_anti")
-      .as[(Long, Array[Float])]
-      .map { case (id, emb) =>
-        ScoredTopK.finish(id, emb, Array.emptyLongArray, Array.emptyDoubleArray,
-          bcSample.value, tau, complete = true)
-      }
-    val tk = cut(hit.unionByName(miss))
+    val tk = cut(BucketIndex.cogroupTopK(queries, ix, g, kPrime, cfg.indexCellCap)
+      .map { case (id, emb, ids, cs, cands) =>
+        ScoredTopK.finish(id, emb, ids, cs, bcSample.value, tau, cands <= kPrime)
+      })
     tk.count()
     (tk, sample.map(_.id), g, ix)
   }
@@ -661,15 +653,11 @@ object IncrementalAlign {
             candAcc.add(rows * qs.length)
             qs.indices.iterator.map(i => (qs(i)._1, bufs(i).resultIds, bufs(i).resultCos, rows))
           }
-          .groupByKey(_._1)
-          .reduceGroups { (x, y) =>
-            val (ids, cs) = ScoredTopK.merge(x._2, x._3, y._2, y._3, kPrime)
-            (x._1, ids, cs, x._4 + y._4)
-          }
+          .transform(BlockedTopK.merge(_, kPrime))
           .mapPartitions { it =>
             // one hash map per partition, not a linear bcQs scan per row
             val qEmb = bcQs.value.toMap
-            it.map { case (srcId, (_, ids, cs, corpusRows)) =>
+            it.map { case (srcId, ids, cs, corpusRows) =>
               // complete ⇔ the list covers the whole corpus — same
               // convention as the bootstrap (corpusArr.length <= kPrime)
               // and the indexed rescore (cands <= kPrime); the previous
@@ -697,8 +685,7 @@ object IncrementalAlign {
             it.foreach { r =>
               var i = 0
               while (i < qs.length) {
-                if (qKeys(i)(r.band) == r.key &&
-                    !BucketIndex.sharedEarlier(qKeys(i), r.prefix)) {
+                if (qKeys(i)(r.band) == r.key && !BlockedTopK.sharesBand(qKeys(i), r.prefix)) {
                   bufs(i).offer(r.id, Embedder.dot(qs(i)._2, r.emb)); cnts(i) += 1
                 }
                 i += 1
@@ -708,14 +695,10 @@ object IncrementalAlign {
             qs.indices.iterator.map(i =>
               (qs(i)._1, bufs(i).resultIds, bufs(i).resultCos, cnts(i)))
           }
-          .groupByKey(_._1)
-          .reduceGroups { (x, y) =>
-            val (ids, cs) = ScoredTopK.merge(x._2, x._3, y._2, y._3, kPrime)
-            (x._1, ids, cs, x._4 + y._4)
-          }
+          .transform(BlockedTopK.merge(_, kPrime))
           .mapPartitions { it =>
             val qEmb = bcQs.value.toMap
-            it.map { case (srcId, (_, ids, cs, cands)) =>
+            it.map { case (srcId, ids, cs, cands) =>
               Maint(ScoredTopK.finish(srcId, qEmb(srcId), ids, cs, bcSample.value, tau,
                 complete = cands <= kPrime),
                 bcOld.value.getOrElse(srcId, -1L), rescore = true)

@@ -1,11 +1,10 @@
 package graft.candidates
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.kg._
 import graft.embed.Embedder
-import graft.util.DetHash
 
 /** IVF-blocked cosine top-k — the inverted-file alternative to
   * [[LshTopK]] for approximate-nearest-neighbor candidate generation
@@ -17,7 +16,7 @@ import graft.util.DetHash
   * Structure: a spherical k-means coarse quantizer (centroids trained on
   * the driver over a DETERMINISTIC hash-chosen corpus sample reduced in
   * sorted-id order — bit-identical at any parallelism, same discipline
-  * as LshTopK's bucket geometry) partitions the corpus into nCells
+  * as the LSH bucket geometry) partitions the corpus into nCells
   * inverted lists; each query probes its nProbe nearest centroids. A
   * (query, corpus) pair meets in AT MOST ONE cell (a corpus row lives in
   * exactly one list), so no cross-probe dedup is needed — unlike LSH
@@ -29,16 +28,15 @@ import graft.util.DetHash
   * Both are exposed; [[graft.Pipeline]] auto-selects LSH by default and
   * either can be forced.
   *
-  * Scale mechanics shared with LshTopK: vectors cross the cogroup
-  * shuffle 16-bit quantized; per-(cell) groups above bucketCap on either
-  * side are 2-D salt-tiled (each side hashes to its own salt, replicates
-  * across the other's), bounding per-task work and working set at
-  * O(cap²); partial top-ks merge in one narrow streaming pass; scores
-  * are RSM z-scores — the same scale as every other candidate path, so
-  * the canonicalization threshold is path-independent.
+  * Scale mechanics are [[BlockedTopK]]'s, with pivot partitions as the
+  * block keys (cell, 0) and empty prefixes: vectors cross the cogroup
+  * shuffle 16-bit quantized, hot cells are 2-D salt-tiled, partial
+  * top-ks merge map-side, and scores are RSM z-scores — the same scale
+  * as every other candidate path, so the canonicalization threshold is
+  * path-independent.
   *
   * Shuffle inventory: one keyed shuffle per side (corpus rows move once,
-  * query rows ≤ nProbe times), one narrow (src, dst, cos) merge shuffle,
+  * query rows ≤ nProbe times), one narrow partial-list merge shuffle,
   * one narrow calibration join. Centroid broadcast is nCells × dim
   * floats; auto nCells is min(√corpus, cellsMax, sample/32) — the
   * sample coupling keeps the quantizer trained (≥32 samples/centroid,
@@ -81,39 +79,17 @@ object IvfTopK {
     math.max(1, math.min(math.min(cellsMax, sampleLen / SamplesPerCell),
       math.ceil(math.sqrt(nCorpus.toDouble)).toInt))
 
-  /** argmax-dot centroid of v; ties break to the smaller cell id (strict
-    * `>` while scanning in index order) so assignment is deterministic. */
-  def nearestCell(v: Array[Float], cents: Array[Array[Float]]): Int = {
-    var best = 0
-    var bestS = Embedder.dot(v, cents(0))
-    var c = 1
-    while (c < cents.length) {
-      val s = Embedder.dot(v, cents(c))
-      if (s > bestS) { bestS = s; best = c }
-      c += 1
-    }
-    best
-  }
+  /** argmax-dot centroid of v; ties break to the smaller cell id so
+    * assignment is deterministic. */
+  def nearestCell(v: Array[Float], cents: Array[Array[Float]]): Int = probeCells(v, cents, 1)(0)
 
   /** The nProbe nearest centroids by dot, descending (ties to the
-    * smaller cell id) — a primitive insertion buffer like TopKBuf. */
+    * smaller cell id — the ScoredTopK total order). */
   def probeCells(v: Array[Float], cents: Array[Array[Float]], nProbe: Int): Array[Int] = {
-    val p = math.min(nProbe, cents.length)
-    val ss = new Array[Double](p)
-    val cs = new Array[Int](p)
-    var n = 0
+    val buf = new ScoredTopK.TopKBuf(math.min(nProbe, cents.length))
     var c = 0
-    while (c < cents.length) {
-      val s = Embedder.dot(v, cents(c))
-      if (n < p || s > ss(n - 1)) {
-        var i = if (n < p) n else n - 1
-        while (i > 0 && ss(i - 1) < s) { ss(i) = ss(i - 1); cs(i) = cs(i - 1); i -= 1 }
-        ss(i) = s; cs(i) = c
-        if (n < p) n += 1
-      }
-      c += 1
-    }
-    java.util.Arrays.copyOf(cs, n)
+    while (c < cents.length) { buf.offer(c, Embedder.dot(v, cents(c))); c += 1 }
+    buf.resultIds.map(_.toInt)
   }
 
   /** Spherical k-means over the (driver-resident, id-sorted) sample:
@@ -145,7 +121,28 @@ object IvfTopK {
     cents
   }
 
-  private val EmptyKeys = Array.empty[Long]
+  /** Block occurrences: corpus rows land in exactly one inverted list,
+    * queries probe their nProbe nearest. */
+  private[graft] def corpusBlocks(ds: Dataset[Emb], cents: Broadcast[Array[Array[Float]]])
+      : Dataset[BlockedTopK.Block[Array[Short]]] = {
+    import ds.sparkSession.implicits._
+    ds.mapPartitions { it =>
+      val cs = cents.value
+      it.map(e => (nearestCell(e.emb, cs), 0L, e.id, LshTopK.quantize(e.emb), Array.emptyLongArray))
+    }
+  }
+
+  private[graft] def queryBlocks(ds: Dataset[Emb], cents: Broadcast[Array[Array[Float]]],
+                                 nProbe: Int): Dataset[BlockedTopK.Block[Array[Short]]] = {
+    import ds.sparkSession.implicits._
+    ds.mapPartitions { it =>
+      val cs = cents.value
+      it.flatMap { e =>
+        val q16 = LshTopK.quantize(e.emb)
+        probeCells(e.emb, cs, nProbe).iterator.map(c => (c, 0L, e.id, q16, Array.emptyLongArray))
+      }
+    }
+  }
 
   def topK(spark: SparkSession, queries: Dataset[Emb], corpus: Dataset[Emb], k: Int,
            cfg: IvfConfig = IvfConfig()): Dataset[Candidate] =
@@ -155,101 +152,21 @@ object IvfTopK {
 
   private def topKImpl(spark: SparkSession, queries: Dataset[Emb], corpus: Dataset[Emb], k: Int,
            cfg: IvfConfig): Dataset[Candidate] = {
-    import spark.implicits._
     val qP = queries.persist(StorageLevel.MEMORY_AND_DISK)
     val cP = corpus.persist(StorageLevel.MEMORY_AND_DISK)
     // count + deterministic smallest-hash sample in ONE corpus pass
-    // (LshTopK.countAndSample — partitioning-independent order statistics)
-    val (nCorpus, sample) = LshTopK.countAndSample(cP, cfg.sampleSize)
+    val (nCorpus, sample) = BlockedTopK.countAndSample(cP, cfg.sampleSize)
     require(sample.nonEmpty, "IvfTopK: empty corpus")
     val nCells =
       if (cfg.nCells > 0) cfg.nCells // explicit: caller owns sample quality
       else autoCells(nCorpus, sample.length, cfg.cellsMax)
     val centsBc = spark.sparkContext.broadcast(
       trainCentroids(sample, math.min(nCells, sample.length), cfg.lloydIters))
-    val negBc = spark.sparkContext.broadcast(
-      sample.indices.collect { case i if i % 8 == 0 => sample(i).emb }.toArray)
-
-    // corpus rows land in exactly one inverted list; queries probe nProbe
-    val cCells: Dataset[(Int, Long, Array[Short])] = cP.mapPartitions { it =>
-      val cents = centsBc.value
-      it.map(e => (nearestCell(e.emb, cents), e.id, LshTopK.quantize(e.emb)))
-    }
-    val qCells: Dataset[(Int, Long, Array[Short])] = qP.mapPartitions { it =>
-      val cents = centsBc.value
-      it.flatMap { e =>
-        val q16 = LshTopK.quantize(e.emb)
-        probeCells(e.emb, cents, cfg.nProbe).iterator.map(c => (c, e.id, q16))
-      }
-    }
-    // persist: both feed the fused hot-count job AND the cogroup
-    val qPc = qCells.persist(StorageLevel.MEMORY_AND_DISK)
-    val cPc = cCells.persist(StorageLevel.MEMORY_AND_DISK)
-
-    // --- 2-D salt tiling from per-side cell counts (one fused job) ---
-    val hot = qPc.toDF("cell", "id", "emb").select(lit(0).as("side"), col("cell"))
-      .unionByName(cPc.toDF("cell", "id", "emb").select(lit(1).as("side"), col("cell")))
-      .groupBy("side", "cell").count()
-      .filter(col("count") > cfg.bucketCap)
-      .as[(Int, Int, Long)].collect()
-    def saltMap(side: Int): Map[Int, Int] = hot.iterator.filter(_._1 == side)
-      .map { case (_, cell, n) => (cell, math.ceil(n.toDouble / cfg.bucketCap).toInt) }.toMap
-    val saltsQ = saltMap(0)
-    val saltsC = saltMap(1)
-    val saltsQBc = spark.sparkContext.broadcast(saltsQ)
-    val saltsCBc = spark.sparkContext.broadcast(saltsC)
-    // derived, never-aliasing cell-id base (see LshTopK: a constant base
-    // double-scores pairs once a degenerate cell needs more salts)
-    val saltBase = math.max(1, saltsC.valuesIterator.maxOption.getOrElse(1))
-
-    val cbS = cPc.mapPartitions { it =>
-      val mC = saltsCBc.value; val mQ = saltsQBc.value
-      it.flatMap { case (cell, id, emb) =>
-        val sc = (DetHash.h1(7, id) % mC.getOrElse(cell, 1)).toInt.abs
-        val sq = mQ.getOrElse(cell, 1)
-        Iterator.tabulate(sq)(q => (cell, q * saltBase + sc, id, emb))
-      }
-    }
-    val qbS = qPc.mapPartitions { it =>
-      val mC = saltsCBc.value; val mQ = saltsQBc.value
-      it.flatMap { case (cell, id, emb) =>
-        val sq = (DetHash.h1(11, id) % mQ.getOrElse(cell, 1)).toInt.abs
-        val sc = mC.getOrElse(cell, 1)
-        Iterator.tabulate(sc)(c => (cell, sq * saltBase + c, id, emb))
-      }
-    }
-    val scored = qbS.groupByKey(r => (r._1, r._2))
-      .cogroup(cbS.groupByKey(r => (r._1, r._2))) { case (_, qs, cs) =>
-        val rows = cs.toArray
-        if (rows.isEmpty) Iterator.empty
-        else {
-          val cell = new LshTopK.Cell(rows.map(_._3), rows.map(_._4),
-            Array.fill(rows.length)(EmptyKeys))
-          qs.flatMap { case (_, _, src, qe) =>
-            LshTopK.topkCell(k, EmptyKeys, qe, cell).map { case (s, dst) => (src, dst, s) }
-          }
-        }
-      }
-
-    // merge partial top-ks: each (src, dst) pair arrives at most once;
-    // LshTopK.mergeTopK aggregates MAP-SIDE (≤ one k-row partial per
-    // source per map partition crosses the merge shuffle)
-    val ranked = LshTopK.mergeTopK(scored, k)
-
-    val calib = LshTopK.rsmCalib(qP, negBc)
-    val result = ranked.toDF("srcId", "dstId", "cos", "rank")
-      .join(calib.toDF("srcId", "mu", "sigma"), "srcId")
-      .as[(Long, Long, Double, Int, Double, Double)]
-      .map { case (src, dst, cos, r, mu, sigma) =>
-        Candidate(src, dst, graft.align.MoCoTrainer.rsmScore(cos, mu, sigma), r) }
-      // the candidate table (≤ queries × k narrow rows) is the smallest
-      // artifact of this operator and is re-consumed by several
-      // downstream actions — persist IT, then drop the four heavy
-      // intermediates so repeated calls in one session (the 42-query
-      // battery, spec suites) don't accumulate cached blocks (ADVICE r2)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    result.count() // materialize before releasing what it was built from
-    Seq(qPc, cPc, qP, cP).foreach(_.unpersist(blocking = false))
-    result
+    // persist: both feed the hot-cell inventory AND the cogroup
+    val qB = queryBlocks(qP, centsBc, cfg.nProbe).persist(StorageLevel.MEMORY_AND_DISK)
+    val cB = corpusBlocks(cP, centsBc).persist(StorageLevel.MEMORY_AND_DISK)
+    val merged = BlockedTopK.topK(qB, cB, k, cfg.bucketCap, LshTopK.DotQCell,
+      BlockedTopK.blockKeys(qB), BlockedTopK.blockKeys(cB))
+    BlockedTopK.rsmCandidates(qP, merged, sample, release = Seq(qB, cB, qP, cP))
   }
 }

@@ -18,7 +18,7 @@ import graft.util.DetHash
   *    exactly to the top-k of the union ([[merge]] law, property-gated);
   *  - RSM calibration reads a DETERMINISTIC ORDER-STATISTIC sample of
   *    the corpus (the `s` ids with smallest (hash(id), id), the same
-  *    discipline as LshTopK.countAndSample): sample membership is a pure
+  *    discipline as BlockedTopK.countAndSample): sample membership is a pure
   *    set function of the corpus id set, so a committed sample merges
   *    with a delta batch's ids into EXACTLY the union's sample
   *    ([[mergeSampleIds]]), and the per-query moments are recomputed
@@ -176,8 +176,8 @@ object ScoredTopK {
     (mu, sigma)
   }
 
-  /** sample-membership key — same hash discipline as LshTopK's
-    * countAndSample so both candidate stacks sample identically */
+  /** sample-membership key — BlockedTopK.countAndSample orders by it
+    * too, so both candidate stacks sample identically */
   @inline def sampleKey(id: Long): Long = DetHash.nonNeg(DetHash.h1(13L, id))
 
   /** The `s` ids with smallest (sampleKey, id) from `ids` — returned

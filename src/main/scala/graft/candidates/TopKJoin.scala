@@ -11,16 +11,21 @@ import graft.embed.Embedder
   * (model/layers_LaBSE_neighbor.py:313-315). Vectors are L2-normalized,
   * so L2 rank ≡ cosine rank (SURVEY.md §7.5 item 6); we rank by cosine.
   *
-  * Two physical paths:
+  * Two kinds of physical path:
   *  - [[ExactTopK]]: broadcast corpus + per-partition heap. The parity
-  *    oracle, and the right plan whenever the corpus fits an executor
-  *    (≲10^6 × dim floats). No shuffle at all on the query side.
-  *  - [[LshTopK]]: BucketedRandomProjectionLSH blocking + SALTED
-  *    within-bucket cosine top-k — the 10^12-scale path (north rule:
-  *    skew handled explicitly). Hot buckets are split into
-  *    ceil(size/cap) salts: queries hash into one salt, corpus rows
-  *    replicate into all salts — identical candidates, bounded partition
-  *    size.
+  *    oracle the recall tests compare against, and the right plan
+  *    whenever the corpus fits an executor (≲10^6 × dim floats). No
+  *    shuffle at all on the query side.
+  *  - BLOCKED top-k ([[BlockedTopK]]) — the 10^12-scale paths: a key
+  *    generator maps each vector to block keys, pairs sharing a block
+  *    are scored in one cogroup cell, and per-source partial lists merge
+  *    map-side. Skew is handled explicitly: a block over the cap on
+  *    either side is 2-D tiled — each side hashes to its own tile and
+  *    replicates across the other side's tiles, so every pair meets in
+  *    exactly one cell and per-task work stays O(cap²). The key
+  *    generators are [[LshTopK]] (banded random-projection keys),
+  *    [[IvfTopK]] (k-means pivot cells) and, for the continuous mode,
+  *    [[BucketIndex.cogroupTopK]] (LSH keys under a frozen geometry).
   */
 object ExactTopK {
 

@@ -469,7 +469,7 @@ class IncrementalSpec extends SparkTestBase {
     assert(inc.index.get.count() == g.bands * kg2)
     // the geometry genuinely PRUNES: total candidate mass across queries
     // is strictly below the all-pairs brute force
-    import graft.candidates.BucketIndex
+    import graft.candidates.BlockedTopK
     val corpus = inc.encoded.filter("kg = 2").select("id", "emb")
       .as[(Long, Array[Float])].collect()
     val cKeys = corpus.map(c => g.keysOf(c._2))
@@ -477,7 +477,7 @@ class IncrementalSpec extends SparkTestBase {
       .as[(Long, Array[Float])].collect()
     val candMass = queries.map { q =>
       val qk = g.keysOf(q._2)
-      cKeys.count(BucketIndex.sharesBucket(qk, _)).toLong
+      cKeys.count(BlockedTopK.sharesBand(qk, _)).toLong
     }.sum
     assert(candMass < queries.length.toLong * corpus.length,
       s"no pruning: candMass=$candMass of ${queries.length * corpus.length}")

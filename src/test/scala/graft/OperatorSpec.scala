@@ -4,9 +4,10 @@ import graft.kg._
 import graft.graph.{Edge, OrderedDedupAgg, NeighborAgg}
 import graft.embed.{Embedder, EmbedderConfig}
 import graft.align.{GatKernel, MoCoTrainer, MoCoConfig}
-import graft.candidates.{ExactTopK, IvfTopK, LshTopK}
+import graft.candidates.{BlockedTopK, BucketIndex, ExactTopK, IndexGeometry, IvfTopK, LshTopK, ScoredTopK}
 import graft.canon.ConnectedComponents
 import org.scalatest.prop.TableDrivenPropertyChecks
+import org.apache.spark.sql.Dataset
 
 /** Per-operator unit/property tests (SURVEY.md §5 engine test strategy). */
 class OperatorSpec extends SparkTestBase {
@@ -42,24 +43,26 @@ class OperatorSpec extends SparkTestBase {
     assert(run(32) == expected)
   }
 
-  test("mergeTopK map-side partial merge == single-pass TopKBuf at any partitioning (property)") {
+  test("BlockedTopK.merge == single-pass TopKBuf at any partitioning (property)") {
     val rnd = new scala.util.Random(41)
     // duplicate scores force the id tie-break; multiple sources mix groups
     val rows = (0 until 500).map { i =>
       (rnd.nextInt(5).toLong, 1000L + rnd.nextInt(200), rnd.nextInt(25) / 10.0)
     }
     val k = 7
-    def expected(src: Long): Seq[(Long, Double)] = {
-      val buf = new LshTopK.TopKBuf(k)
-      rows.filter(_._1 == src).foreach { case (_, dst, s) => buf.offer(s, dst) }
-      Seq.tabulate(buf.n)(j => (buf.ids(j), buf.ss(j)))
+    def expected(src: Long): (Seq[(Long, Double)], Long) = {
+      val buf = new ScoredTopK.TopKBuf(k)
+      val mine = rows.filter(_._1 == src)
+      mine.foreach { case (_, dst, s) => buf.offer(dst, s) }
+      (buf.resultIds.toSeq.zip(buf.resultCos), mine.length.toLong)
     }
+    val partials = rows.map { case (src, dst, s) => (src, Array(dst), Array(s), 1L) }
     for (parts <- Seq(1, 3, 16)) {
-      val got = LshTopK.mergeTopK(rows.toDS().repartition(parts), k).collect()
-        .groupBy(_._1)
-        .map { case (src, arr) => src -> arr.sortBy(_._4).map(t => (t._2, t._3)).toSeq }
+      val got = BlockedTopK.merge(partials.toDS().repartition(parts), k).collect()
+      assert(got.map(_._1).distinct.length == got.length, s"one row per source, parts=$parts")
+      val bySrc = got.map(p => p._1 -> ((p._2.toSeq.zip(p._3), p._4))).toMap
       for (src <- 0L until 5L)
-        assert(got.getOrElse(src, Nil) == expected(src), s"src=$src parts=$parts")
+        assert(bySrc.getOrElse(src, (Nil, 0L)) == expected(src), s"src=$src parts=$parts")
     }
   }
 
@@ -451,6 +454,74 @@ class OperatorSpec extends SparkTestBase {
     val tiled = run(7)
     assert(base.nonEmpty, "fixture produced no shared buckets")
     assert(tiled == base)
+  }
+
+  test("BucketIndex cogroup: a key differing from the probe's only above bit 48 is no candidate") {
+    // cells are keyed by the FULL (band, key) — the delta path's
+    // candidate rule (sharesBand) compares full keys, so the bootstrap
+    // must not pair rows whose keys agree only in their low 48 bits
+    val dim = 16
+    def vec(i: Int): Array[Float] = Embedder.l2normalize(Array.tabulate(dim)(d => 1f + ((d * i) % 5)))
+    val geom = IndexGeometry.fit(Array(Emb(1L, vec(1)), Emb(2L, vec(2))), bands = 4, rows = 2)
+    val q = vec(1)
+    val forged = BucketIndex.IndexRow(0, geom.keysOf(q)(0) ^ (1L << 50), 999L, q, Array.emptyLongArray)
+    val got = BucketIndex.cogroupTopK(Seq((1L, q)).toDS(), Seq(forged).toDS(), geom, kPrime = 4)
+      .collect()
+    assert(!got.exists(_._3.contains(999L)), "a row sharing no bucket was scored")
+    assert(got.map(_._5).sum == 0L)
+  }
+
+  test("BlockedTopK: tiled (cap 8) == untiled at 1/3/16 partitions for LSH, IVF, indexed keys") {
+    // each key generator's blocks through the kernel: 2-D tiling must not
+    // change a row (lists, scores, candidate counts), emit a duplicate
+    // (src, dst), or depend on partitioning — and the counts must equal
+    // the candidate rule evaluated pair by pair on the driver
+    import BlockedTopK.{Block, CellScore}
+    val (q, c) = ivfFixture(0.05)
+    val qa = q.collect(); val ca = c.collect().sortBy(_.id)
+    val lshGeom = IndexGeometry.fit(ca, bands = 10, rows = 2)
+    val frozen = IndexGeometry.fit(ca, bands = 16, rows = 2)
+    val cents = IvfTopK.trainCentroids(ca, 4, 6)
+    def keyRule(g: IndexGeometry)(qe: Array[Float]): Long = {
+      val qk = g.keysOf(qe); ca.count(e => BlockedTopK.sharesBand(qk, g.keysOf(e.emb))).toLong
+    }
+    def cellRule(qe: Array[Float]): Long = {
+      val probed = IvfTopK.probeCells(qe, cents, 2).toSet
+      ca.count(e => probed(IvfTopK.nearestCell(e.emb, cents))).toLong
+    }
+    def check[V: scala.reflect.ClassTag: scala.reflect.runtime.universe.TypeTag](
+        name: String, qb: Dataset[Block[V]], cb: Dataset[Block[V]], score: CellScore[V],
+        rule: Array[Float] => Long, parts: Int): Unit = {
+      def run(cap: Int) = BlockedTopK.topK(qb, cb, 5, cap, score,
+          BlockedTopK.blockKeys(qb), BlockedTopK.blockKeys(cb))
+        .collect().map(p => (p._1, p._2.toSeq, p._3.toSeq, p._4)).sortBy(_._1).toSeq
+      assert(BlockedTopK.hotCells(BlockedTopK.blockKeys(qb), BlockedTopK.blockKeys(cb), 8).nonEmpty,
+        s"$name: cap 8 tiles nothing")
+      val untiled = run(Int.MaxValue)
+      val tiled = run(8)
+      assert(untiled.nonEmpty, name)
+      assert(tiled == untiled, s"$name parts=$parts: tiling changed the rows")
+      assert(tiled.map(_._1).distinct.length == tiled.length, s"$name: two rows for one source")
+      tiled.foreach(p => assert(p._2.distinct.length == p._2.length, s"$name: duplicate (src, dst)"))
+      val expected = qa.map(e => e.id -> rule(e.emb)).filter(_._2 > 0).sortBy(_._1).toSeq
+      assert(tiled.map(p => (p._1, p._4)) == expected, s"$name parts=$parts: candidate counts")
+    }
+    val bc = spark.sparkContext
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    for (parts <- Seq(1, 3, 16)) {
+      try {
+        spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
+        val (qp, cp) = (q.repartition(parts), c.repartition(parts))
+        val lshBc = bc.broadcast(lshGeom); val centsBc = bc.broadcast(cents)
+        check("lsh", LshTopK.blocks(qp, lshBc), LshTopK.blocks(cp, lshBc), LshTopK.DotQCell,
+          keyRule(lshGeom), parts)
+        check("ivf", IvfTopK.queryBlocks(qp, centsBc, 2), IvfTopK.corpusBlocks(cp, centsBc),
+          LshTopK.DotQCell, cellRule, parts)
+        def indexed(ds: Dataset[Emb]) =
+          ds.flatMap(e => BucketIndex.rowsOf(e.id, e.emb, frozen)).as[Block[Array[Float]]]
+        check("indexed", indexed(qp), indexed(cp), BucketIndex.DotCell, keyRule(frozen), parts)
+      } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
   }
 
   test("dotQ (SIMD or scalar) == long-accumulated reference, bit for bit") {
