@@ -4,14 +4,13 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.kg._
-import graft.align.{GatKernel, GatWeights, MoCoTrainer}
+import graft.align.{GatKernel, GatWeights}
 import graft.candidates.{BlockedTopK, BucketIndex, IndexGeometry, ScoredTopK}
 import graft.candidates.BucketIndex.IndexRow
 import graft.candidates.ScoredTopK.ScoredQuery
 import graft.canon.ConnectedComponents
 import graft.embed.{Embedder, EmbedderConfig}
 import graft.extract.Extraction
-import graft.graph.NeighborAgg
 import graft.tableio.TableIO
 
 /** CONTINUOUS KG construction — the operating mode the 10^12-doc design
@@ -87,8 +86,8 @@ final case class IncrementalConfig(
       * (hot buckets tile into ≤cap²-pair tasks, see BucketIndex) */
     indexCellCap: Int = 512,
     /** Forced-broadcast gate for entity-dimension joins (extraction
-      * dict, neighbor name/kg dims, canonical names) — the batch
-      * pipeline's [[PipelineConfig.dimBroadcastMaxRows]] discipline:
+      * dict, neighbor name/kg dims, canonical names) — the
+      * [[Stages.dimsBounded]] probe, as in the batch pipeline:
       * bootstrap and every refresh probe the (updated) dictionary once
       * (one narrow bounded job, util.BoundedProbe) and force-broadcast
       * only under the cap; above it the hints drop and Catalyst/AQE
@@ -105,9 +104,7 @@ final case class IncrementalConfig(
       * the designed path at that scale, and switching rules must be the
       * caller's explicit choice because exact and indexed lists are
       * different contracts. ≤ 0 disables the gate. */
-    exactBootstrapMaxRows: Long = 4_000_000L,
-    /** per-phase wall + set-size diagnostics on stderr */
-    diag: Boolean = false)
+    exactBootstrapMaxRows: Long = 4_000_000L)
 
 /** Committed state — one row per KG1 query in `topk` (the scored
   * candidate table, query encodings denormalized in), current encodings
@@ -158,7 +155,7 @@ object IncrementalAlign {
 
   private def lvl = StorageLevel.MEMORY_AND_DISK
 
-  /** State-boundary lineage cut (the Pipeline stage-4 discipline):
+  /** State-boundary lineage cut (the discipline of [[Stages.encode]]):
     * every AlignState component is re-referenced many times by the next
     * delta — and feeds the one after that — so a persist-only state
     * compounds plan depth per batch until the driver spends its time
@@ -168,102 +165,41 @@ object IncrementalAlign {
     * session has a checkpoint dir (real cluster), lazy local otherwise. */
   private def cut[T](ds: Dataset[T]): Dataset[T] = graft.util.Lineage.cut(ds)
 
-  /** blocks for the given triples; centers restricted to `centers` when
-    * given (the touched set) — identical per-center rows to a full run
-    * because a center's complete incident edge set is present */
-  private def blocksFor(spark: SparkSession, triples: Dataset[DocTriple], ents: Dataset[Entity],
-                        rawEmbs: Dataset[Emb], dim: Int,
-                        centers: Option[Set[Long]],
-                        boundedDims: Boolean = true): Dataset[NeighborBlock] = {
-    import spark.implicits._
-    // seq stays a pure function of triple CONTENT (not provenance): the
-    // first-seen neighbor order is invariant under retract/re-add
-    val withSeq = triples.map(dt => (dt.triple, (dt.head << 20) ^ dt.tail ^ (dt.rel << 40)))
-    val edges = NeighborAgg.undirectedEdges(spark, withSeq, ents, boundedDims)
-    val ordered0 = NeighborAgg.orderedNeighbors(spark, edges, ents, boundedDims = boundedDims)
-    val ordered = centers match {
-      case Some(cs) =>
-        val bc = spark.sparkContext.broadcast(cs)
-        ordered0.filter(r => bc.value.contains(r._1))
-      case None => ordered0
-    }
-    NeighborAgg.blocks(spark, ordered, rawEmbs, ents, dim, boundedDims)
-  }
-
-  /** encode the given id set: GAT over its blocks, raw-embedding
-    * fallback for blockless entities (the batch pipeline's encodedAll
-    * discipline) → (id, kg, emb) */
+  /** encode the given (delta-sized) id set: [[Stages.encodeBlocks]] over
+    * the blocks of the touched centers, kg attached from the driver-side
+    * map the caller already holds → (id, kg, emb). [[Stages.encode]]'s
+    * dictionary join would cost one more Spark job per delta and per
+    * retract (measured on perfbench cdc_stream --trace 1: 35 → 36 and
+    * 30 → 31). */
   private def encodeIds(spark: SparkSession, ids: Set[Long], kgOf: Map[Long, Int],
                         triples: Dataset[DocTriple], ents: Dataset[Entity],
                         rawEmbs: Dataset[Emb], weights: GatWeights,
-                        dim: Int, boundedDims: Boolean = true): DataFrame = {
+                        dim: Int, boundedDims: Boolean): DataFrame = {
     import spark.implicits._
     val bcIds = spark.sparkContext.broadcast(ids)
     val bcKg = spark.sparkContext.broadcast(kgOf)
-    val blocks = blocksFor(spark, triples, ents, rawEmbs, dim, Some(ids), boundedDims)
-    // cut: `enc` is referenced twice below (union branch + anti-join
-    // build side) — without it the whole NeighborAgg+GAT subtree (three
-    // shuffles) computes twice inside every downstream action
-    val enc = cut(MoCoTrainer.encode(spark, blocks, weights).toDF("id", "emb"))
-    val blockless = rawEmbs.filter(e => bcIds.value.contains(e.id)).toDF("id", "emb")
-      .join(graft.util.BoundedProbe.dimHint(enc.select("id"), boundedDims),
-        Seq("id"), "left_anti")
-    enc.unionByName(blockless).as[(Long, Array[Float])]
+    val blocks = Stages.blocks(spark, triples, ents, rawEmbs, dim, boundedDims, Some(ids))
+    Stages.encodeBlocks(spark, blocks, weights,
+        rawEmbs.filter(e => bcIds.value.contains(e.id)), boundedDims)
+      .as[(Long, Array[Float])]
       .map { case (id, emb) => (id, bcKg.value(id), emb) }
       .toDF("id", "kg", "emb")
   }
 
-  /** bootstrap encoding of the ENTIRE dictionary — the distributed twin
-    * of [[encodeIds]] (which is delta-sized by contract and ships driver
-    * id/kg sets): GAT over all blocks, raw-embedding fallback for
-    * blockless entities via anti-join, kg attached by a dictionary JOIN —
-    * no driver collect of the entity table anywhere, so the indexed
-    * mode's bootstrap keeps its 10^12-row shape end-to-end. */
-  private def encodeAll(spark: SparkSession, triples: Dataset[DocTriple],
-                        ents: Dataset[Entity], rawEmbs: Dataset[Emb],
-                        weights: GatWeights, dim: Int,
-                        boundedDims: Boolean): DataFrame = {
-    val blocks = blocksFor(spark, triples, ents, rawEmbs, dim, None, boundedDims)
-    val enc = cut(MoCoTrainer.encode(spark, blocks, weights).toDF("id", "emb"))
-    val blockless = rawEmbs.toDF("id", "emb")
-      .join(graft.util.BoundedProbe.dimHint(enc.select("id"), boundedDims),
-        Seq("id"), "left_anti")
-    val kgOf = graft.util.BoundedProbe.dimHint(
-      ents.toDF().select(col("id"), col("kg")), boundedDims)
-    enc.unionByName(blockless).join(kgOf, "id")
-      .select(col("id"), col("kg"), col("emb"))
-  }
-
-  /** canonical materialization with (head, rel, tail) lineage retained —
-    * the batch pipeline's stage 6 over an arbitrary triple subset */
-  private def materialize(spark: SparkSession, triples: Dataset[DocTriple],
-                          assignment: DataFrame, ents: Dataset[Entity],
-                          boundedDims: Boolean = true): DataFrame = {
-    // renames live in the join CONDITION (aliases over the same
-    // un-projected plan) so each dimension's pair of broadcast exchanges
-    // canonicalizes identically and AQE builds it once — the Pipeline
-    // stage-6 discipline (one broadcast of a multi-GB dictionary at the
-    // design point, and one fewer scheduled job per duplicate here)
-    val canonMap = assignment.select(col("node"), col("component"))
-    val names = graft.util.BoundedProbe.dimHint(
-      ents.toDF().select(col("id"), col("name")), boundedDims)
-    triples.toDF().as("t")
-      .join(canonMap.as("ch"), col("t.head") === col("ch.node"), "left")
-      .join(canonMap.as("ct"), col("t.tail") === col("ct.node"), "left")
-      .withColumn("subjId", coalesce(col("ch.component"), col("t.head")))
-      .withColumn("objId", coalesce(col("ct.component"), col("t.tail")))
-      .join(names.as("ns"), col("subjId") === col("ns.id"))
-      .join(names.as("no"), col("objId") === col("no.id"))
-      .select(col("t.docId").as("docId"), col("t.head").as("head"),
-        col("t.rel").as("rel"), col("t.tail").as("tail"),
-        col("ns.name").as("subj"),
-        concat(lit("rel_"), col("t.rel")).as("pred"),
-        col("no.name").as("obj"),
-        col("subjId"), col("objId"))
-  }
-
   private val CanonCols = Seq("docId", "head", "rel", "tail", "subj", "pred",
     "obj", "subjId", "objId")
+
+  /** [[Stages.canonical]] with the (docId, head, rel, tail) lineage the
+    * state's canonical table keeps */
+  private def canonicalOf(triples: Dataset[DocTriple], assignment: DataFrame,
+                          ents: Dataset[Entity], boundedDims: Boolean): DataFrame =
+    Stages.canonical(triples, assignment, ents, boundedDims).select(CanonCols.map(col): _*)
+
+  /** accepted alignment edges (a = KG1 query, b = accepted KG2 target) */
+  private def acceptedOf(spark: SparkSession, topk: Dataset[ScoredQuery]): DataFrame = {
+    import spark.implicits._
+    topk.filter(_.acceptedDst >= 0L).map(q => (q.srcId, q.acceptedDst)).toDF("a", "b")
+  }
 
   /** Bootstrap: the one-shot batch scorer over the full corpus (exact
     * broadcast path — at the design point this is the regular LSH/IVF
@@ -277,28 +213,40 @@ object IncrementalAlign {
   def initial(spark: SparkSession, docs: Dataset[Doc], ents: Dataset[Entity],
               cfg: IncrementalConfig,
               geometry: Option[IndexGeometry] = None): AlignState = {
-    import spark.implicits._
     val entsP = cut(ents)
-    // one bounded probe decides every forced dim-broadcast of the
-    // bootstrap (PipelineConfig.dimBroadcastMaxRows discipline)
-    val dimsBounded = cfg.dimBroadcastMaxRows > 0 &&
-      graft.util.BoundedProbe.atMost(entsP.toDF(), cfg.dimBroadcastMaxRows)
+    val dimsBounded = Stages.dimsBounded(entsP, cfg.dimBroadcastMaxRows)
     val idT = cut(Extraction.idTriplesP(spark, Extraction.rawTriples(spark, docs), entsP,
       dimsBounded))
     val rawE = cut(Embedder.embedEntities(spark, entsP, cfg.embed))
     val weights = GatKernel.initWeights(cfg.embed.dim)
-    val encoded = cut(encodeAll(spark, idT, entsP, rawE, weights, cfg.embed.dim,
-      dimsBounded))
+    val encoded = Stages.encode(spark,
+      Stages.blocks(spark, idT, entsP, rawE, cfg.embed.dim, dimsBounded),
+      weights, rawE, entsP, dimsBounded)
     encoded.count()
+    bootstrap(spark, entsP, idT, rawE, encoded, weights, dimsBounded, cfg, geometry)
+  }
 
-    // store top-k' (k' = 2k) with completeness — the maintenance slack
-    // that lets delta batches drop re-encoded dsts without re-scoring
+  /** Score every KG1 query of `encoded` against the KG2 corpus and
+    * canonicalize from the fresh lists — the tail shared by [[initial]]
+    * and [[rebootstrap]], so a re-bootstrapped state is bit-identical to
+    * a fresh initial by construction.
+    *
+    * Lists are stored as top-k' (k' = 2k) with completeness — the
+    * maintenance slack that lets delta batches drop re-encoded dsts
+    * without re-scoring. The INDEXED scorer is DISTRIBUTED end-to-end:
+    * the calibration sample comes from one treeAggregate pass, the index
+    * is built first, and queries score against it via the bucket
+    * cogroup ([[BucketIndex.cogroupTopK]]) — no corpus or query collect.
+    * There `complete` means "the list is ALL candidates of this query";
+    * queries sharing no bucket get an empty COMPLETE list. */
+  private def bootstrap(spark: SparkSession, ents: Dataset[Entity], idT: Dataset[DocTriple],
+                        rawE: Dataset[Emb], encoded: DataFrame, weights: GatWeights,
+                        dimsBounded: Boolean, cfg: IncrementalConfig,
+                        geometry: Option[IndexGeometry]): AlignState = {
+    import spark.implicits._
     val kPrime = 2 * cfg.topK; val tau = cfg.rsmThreshold
-    val corpusDs = encoded.filter(col("kg") === 2).select(col("id"), col("emb"))
-      .as[(Long, Array[Float])].map { case (i, e) => Emb(i, e) }
-    val queries = encoded.filter(col("kg") === 1).select(col("id"), col("emb"))
-      .as[(Long, Array[Float])]
-    val (topkC, sampleIds, geom, index) = if (!cfg.useIndex) {
+    val (queries, corpusDs) = Stages.sides(spark, encoded)
+    val (topk, sampleIds, geom, index) = if (!cfg.useIndex) {
       // EXACT bootstrap: full-corpus broadcast scorer — the one
       // full-corpus driver collect of the continuous mode (at the design
       // point the bootstrap is the regular batch pipeline, see class
@@ -318,54 +266,35 @@ object IncrementalAlign {
       val bcCorpus = spark.sparkContext.broadcast(corpusArr)
       val bcSample = spark.sparkContext.broadcast(sample)
       val corpusComplete = corpusArr.length <= kPrime
-      val tk = cut(queries.map { case (id, emb) =>
-        val (ids, cs) = ScoredTopK.scoreAll(emb, bcCorpus.value, kPrime)
-        ScoredTopK.finish(id, emb, ids, cs, bcSample.value, tau, corpusComplete)
+      val tk = cut(queries.map { q =>
+        val (ids, cs) = ScoredTopK.scoreAll(q.emb, bcCorpus.value, kPrime)
+        ScoredTopK.finish(q.id, q.emb, ids, cs, bcSample.value, tau, corpusComplete)
       })
       tk.count()
       (tk, sIds, None, None)
     } else {
-      val (tk, sIds, g, ix) =
-        indexedBootstrap(spark, corpusDs, queries, geometry, cfg, kPrime, tau)
-      (tk, sIds, Some(g), Some(ix))
+      val sample = BucketIndex.corpusSample(corpusDs, cfg.sampleSize)
+      val g = geometry.getOrElse(IndexGeometry.fit(sample, cfg.indexBands,
+        cfg.indexRowsPerBand, cfg.indexWScale))
+      val bcG = spark.sparkContext.broadcast(g)
+      val bcSample = spark.sparkContext.broadcast(sample)
+      val ix = cut(corpusDs.flatMap(e => BucketIndex.rowsOf(e.id, e.emb, bcG.value)))
+      ix.count()
+      val tk = cut(BucketIndex.cogroupTopK(queries.toDF().as[(Long, Array[Float])], ix, g,
+          kPrime, cfg.indexCellCap)
+        .map { case (id, emb, ids, cs, cands) =>
+          ScoredTopK.finish(id, emb, ids, cs, bcSample.value, tau, cands <= kPrime)
+        })
+      tk.count()
+      (tk, sample.map(_.id), Some(g), Some(ix))
     }
 
-    val accepted = cut(topkC.filter(_.acceptedDst >= 0L)
-      .map(q => (q.srcId, q.acceptedDst)).toDF("a", "b"))
+    val accepted = cut(acceptedOf(spark, topk))
     val assignment = cut(ConnectedComponents.runAuto(spark, accepted))
-    val canonical = cut(materialize(spark, idT, assignment, entsP, dimsBounded))
+    val canonical = cut(canonicalOf(idT, assignment, ents, dimsBounded))
     canonical.count()
-    AlignState(entsP, idT, rawE, encoded, topkC, sampleIds, accepted, assignment,
+    AlignState(ents, idT, rawE, encoded, topk, sampleIds, accepted, assignment,
       canonical, weights, geom, index)
-  }
-
-  /** INDEXED bootstrap scorer — DISTRIBUTED end-to-end (round 3.5): the
-    * calibration sample comes from one treeAggregate pass, the index is
-    * built first, and queries score against it via the bucket cogroup
-    * ([[BucketIndex.cogroupTopK]]) — no corpus or query collect.
-    * `complete` means "the list is ALL candidates of this query";
-    * queries sharing no bucket get an empty COMPLETE list. Shared
-    * VERBATIM by [[initial]] (useIndex) and [[rebootstrap]], so a
-    * re-bootstrapped state is bit-identical to a fresh initial by
-    * construction. */
-  private def indexedBootstrap(spark: SparkSession, corpusDs: Dataset[Emb],
-      queries: Dataset[(Long, Array[Float])], geometry: Option[IndexGeometry],
-      cfg: IncrementalConfig, kPrime: Int, tau: Double)
-      : (Dataset[ScoredQuery], Array[Long], IndexGeometry, Dataset[IndexRow]) = {
-    import spark.implicits._
-    val sample = BucketIndex.corpusSample(corpusDs, cfg.sampleSize)
-    val g = geometry.getOrElse(IndexGeometry.fit(sample, cfg.indexBands,
-      cfg.indexRowsPerBand, cfg.indexWScale))
-    val bcG = spark.sparkContext.broadcast(g)
-    val bcSample = spark.sparkContext.broadcast(sample)
-    val ix = cut(corpusDs.flatMap(e => BucketIndex.rowsOf(e.id, e.emb, bcG.value)))
-    ix.count()
-    val tk = cut(BucketIndex.cogroupTopK(queries, ix, g, kPrime, cfg.indexCellCap)
-      .map { case (id, emb, ids, cs, cands) =>
-        ScoredTopK.finish(id, emb, ids, cs, bcSample.value, tau, cands <= kPrime)
-      })
-    tk.count()
-    (tk, sample.map(_.id), g, ix)
   }
 
   /** GEOMETRY RE-FIT for the indexed mode (round 4, VERDICT r3 missing
@@ -394,28 +323,10 @@ object IncrementalAlign {
     * instead (e.g. replaying a committed one). */
   def rebootstrap(spark: SparkSession, state: AlignState, cfg: IncrementalConfig,
                   geometry: Option[IndexGeometry] = None): AlignState = {
-    import spark.implicits._
     require(cfg.useIndex, "rebootstrap is an indexed-mode operation (cfg.useIndex)")
-    val kPrime = 2 * cfg.topK; val tau = cfg.rsmThreshold
-    val corpusDs = state.encoded.filter(col("kg") === 2).select(col("id"), col("emb"))
-      .as[(Long, Array[Float])].map { case (i, e) => Emb(i, e) }
-    val queries = state.encoded.filter(col("kg") === 1).select(col("id"), col("emb"))
-      .as[(Long, Array[Float])]
-    val (tk, sIds, g, ix) =
-      indexedBootstrap(spark, corpusDs, queries, geometry, cfg, kPrime, tau)
-    val accepted = cut(tk.filter(_.acceptedDst >= 0L)
-      .map(q => (q.srcId, q.acceptedDst)).toDF("a", "b"))
-    val assignment = cut(ConnectedComponents.runAuto(spark, accepted))
-    val dimsBounded = cfg.dimBroadcastMaxRows > 0 &&
-      graft.util.BoundedProbe.atMost(state.ents.toDF(), cfg.dimBroadcastMaxRows)
-    val canonical = cut(materialize(spark, state.idTriples, assignment, state.ents,
-      dimsBounded))
-    canonical.count()
-    state.copy(topk = tk, sampleIds = sIds, accepted = accepted,
-      assignment = assignment, canonical = canonical,
-      geometry = Some(g), index = Some(ix),
-      // the fresh fit resets the monitor — scores accumulate per delta
-      drift = None)
+    // the fresh fit resets the drift monitor — scores accumulate per delta
+    bootstrap(spark, state.ents, state.idTriples, state.rawEmbs, state.encoded, state.weights,
+      Stages.dimsBounded(state.ents, cfg.dimBroadcastMaxRows), cfg, geometry)
   }
 
   /** One delta batch: new docs + new dictionary entries → the next
@@ -424,9 +335,6 @@ object IncrementalAlign {
             ents2: Dataset[Entity], cfg: IncrementalConfig): AlignState = {
     import spark.implicits._
     val sc = spark.sparkContext
-    val tStart = System.nanoTime()
-    def diag(msg: => String): Unit = if (cfg.diag)
-      System.err.println(f"[inc-delta ${(System.nanoTime() - tStart) / 1e9}%6.1f s] $msg")
 
     // ---- delta extraction against the union dictionary ----
     // append-mostly tables: cut only the DELTA piece and union lazily —
@@ -438,8 +346,7 @@ object IncrementalAlign {
     val ents2C = cut(ents2.as[Entity])
     val entsU = state.ents.unionByName(ents2C)
     // one bounded probe per batch over the UPDATED dictionary
-    val dimsBounded = cfg.dimBroadcastMaxRows > 0 &&
-      graft.util.BoundedProbe.atMost(entsU.toDF(), cfg.dimBroadcastMaxRows)
+    val dimsBounded = Stages.dimsBounded(entsU, cfg.dimBroadcastMaxRows)
     val rawE2 = cut(Embedder.embedEntities(spark, ents2C, cfg.embed))
     val rawU = state.rawEmbs.unionByName(rawE2)
     val deltaT = cut(Extraction.idTriplesP(spark, Extraction.rawTriples(spark, docs2), entsU,
@@ -458,13 +365,12 @@ object IncrementalAlign {
     val endpKg = state.ents.filter(e => bcEndp.value.contains(e.id))
       .map(e => (e.id, e.kg)).collect().toMap
     val touched: Map[Long, Int] = newIds ++ endpKg
-    diag(s"touched=${touched.size} (new=${newIds.size}, committed endpoints=${endpKg.size})")
 
     refresh(spark, state, entsU, rawU, triplesU, touched,
       newKg1 = newIds.collect { case (id, 1) => id }.toSet,
       deltaKg2Ids = deltaEnts.filter(_.kg == 2).map(_.id),
       newDocIds = deltaTArr.iterator.map(_.docId).toSet,
-      droppedDocIds = Set.empty, cfg, tStart, dimsBounded)
+      droppedDocIds = Set.empty, cfg, dimsBounded)
   }
 
   /** Retract committed documents (takedown/GDPR path): drop their triples
@@ -479,9 +385,6 @@ object IncrementalAlign {
               cfg: IncrementalConfig): AlignState = {
     import spark.implicits._
     val sc = spark.sparkContext
-    val tStart = System.nanoTime()
-    def diag(msg: => String): Unit = if (cfg.diag)
-      System.err.println(f"[inc-retract ${(System.nanoTime() - tStart) / 1e9}%6.1f s] $msg")
 
     val bcDocs = sc.broadcast(docIds)
     // the retracted rows are delta-sized; the survivor table is one
@@ -492,13 +395,11 @@ object IncrementalAlign {
     val bcEndp = sc.broadcast(endpointIds)
     val touched = state.ents.filter(e => bcEndp.value.contains(e.id))
       .map(e => (e.id, e.kg)).collect().toMap
-    diag(s"retract docs=${docIds.size}: gone triples=${goneArr.length}, touched=${touched.size}")
 
     refresh(spark, state, state.ents, state.rawEmbs, remaining, touched,
       newKg1 = Set.empty, deltaKg2Ids = Array.empty,
-      newDocIds = Set.empty, droppedDocIds = docIds, cfg, tStart,
-      dimsBounded = cfg.dimBroadcastMaxRows > 0 &&
-        graft.util.BoundedProbe.atMost(state.ents.toDF(), cfg.dimBroadcastMaxRows))
+      newDocIds = Set.empty, droppedDocIds = docIds, cfg,
+      Stages.dimsBounded(state.ents, cfg.dimBroadcastMaxRows))
   }
 
   /** Shared maintenance core: given the UPDATED committed tables
@@ -514,14 +415,12 @@ object IncrementalAlign {
                       touched: Map[Long, Int], newKg1: Set[Long],
                       deltaKg2Ids: Array[Long],
                       newDocIds: Set[String], droppedDocIds: Set[String],
-                      cfg: IncrementalConfig, tStart: Long,
+                      cfg: IncrementalConfig,
                       dimsBounded: Boolean): AlignState = {
     import spark.implicits._
     val sc = spark.sparkContext
     val dim = cfg.embed.dim; val k = cfg.topK; val kPrime = 2 * cfg.topK
     val tau = cfg.rsmThreshold
-    def diag(msg: => String): Unit = if (cfg.diag)
-      System.err.println(f"[inc-refresh ${(System.nanoTime() - tStart) / 1e9}%6.1f s] $msg")
 
     val touchedSet = touched.keySet
     val bcTouched = sc.broadcast(touchedSet)
@@ -532,13 +431,11 @@ object IncrementalAlign {
       .filter(t => bcTouched.value.contains(t.head) || bcTouched.value.contains(t.tail))
     val encodedT = encodeIds(spark, touchedSet, touched, incident, entsU, rawU,
       state.weights, dim, dimsBounded)
-    diag("re-encode: encodeIds plan built")
     val encodedU0 = state.encoded.as[(Long, Int, Array[Float])]
       .filter(r => !bcTouched.value.contains(r._1)).toDF("id", "kg", "emb")
       .unionByName(encodedT)
     val encodedUC = cut(encodedU0)
     encodedUC.count()
-    diag("re-encode done")
 
     // ---- calibration sample (exact order-statistics merge) + delta
     //      corpus, fetched in ONE corpus pass ----
@@ -561,7 +458,6 @@ object IncrementalAlign {
         .map { case (i, _, e) => Emb(i, e) }.sortBy(_.id))
     val touchedKg1 = touched.collect { case (id, kg) if kg == 1 => id }.toSet
     val bcTouchedKg1 = sc.broadcast(touchedKg1)
-    diag(s"delta corpus=${bcDeltaCorpus.value.length} (changed kg2=${changedKg2.size}), touched kg1=${touchedKg1.size}")
 
     // ---- drift monitor (indexed mode): score this batch's fresh
     //      encodings against the frozen geometry, from arrays already
@@ -571,7 +467,6 @@ object IncrementalAlign {
       val reference = bcSample.value.filter(e => !bcChangedKg2.value.contains(e.id))
       graft.candidates.DriftMonitor.assess(bcDeltaCorpus.value, reference, g)
     }
-    driftStats.foreach(s => diag(s"drift monitor: $s"))
 
     // ---- indexed mode: maintain the committed bucket index FIRST so
     //      the rescore pass probes current encodings — drop re-encoded
@@ -626,7 +521,6 @@ object IncrementalAlign {
     val oldAccepted: Map[Long, Long] =
       phaseA.filter(_.rescore).map(m => (m.q.srcId, m.oldAccepted)).collect().toMap
     val rescoreIds = oldAccepted.keySet ++ newKg1
-    diag(s"phase A done; rescore queries=${rescoreIds.size} (stale lists=${oldAccepted.size - oldAccepted.keySet.count(touchedKg1)}, stale encodings=${oldAccepted.keySet.count(touchedKg1)}, new=${newKg1.size})")
     val bcRescoreIds = sc.broadcast(rescoreIds)
     val rescoreQs = encodedUC.filter(col("kg") === 1).select(col("id"), col("emb"))
       .as[(Long, Array[Float])].filter(r => bcRescoreIds.value.contains(r._1)).collect()
@@ -638,69 +532,67 @@ object IncrementalAlign {
     val candAcc = sc.longAccumulator("rescoreCandidatePairs")
     val rescored: Dataset[Maint] =
       if (rescoreQs.isEmpty) spark.emptyDataset[Maint]
-      else if (bcGeom.value == null)
-        encodedUC.filter(col("kg") === 2).select(col("id"), col("emb"))
-          .as[(Long, Array[Float])]
-          .mapPartitions { it =>
-            val qs = bcQs.value
-            val bufs = Array.fill(qs.length)(new ScoredTopK.TopKBuf(kPrime))
-            var rows = 0L
-            it.foreach { case (cid, cemb) =>
-              rows += 1
-              var i = 0
-              while (i < qs.length) { bufs(i).offer(cid, Embedder.dot(qs(i)._2, cemb)); i += 1 }
-            }
-            candAcc.add(rows * qs.length)
-            qs.indices.iterator.map(i => (qs(i)._1, bufs(i).resultIds, bufs(i).resultCos, rows))
+      else {
+        // per-partition partial lists (src, ids, cos, n), n = the rows
+        // this partition scored for src
+        val partials: Dataset[(Long, Array[Long], Array[Double], Long)] =
+          if (bcGeom.value == null)
+            encodedUC.filter(col("kg") === 2).select(col("id"), col("emb"))
+              .as[(Long, Array[Float])]
+              .mapPartitions { it =>
+                val qs = bcQs.value
+                val bufs = Array.fill(qs.length)(new ScoredTopK.TopKBuf(kPrime))
+                var rows = 0L
+                it.foreach { case (cid, cemb) =>
+                  rows += 1
+                  var i = 0
+                  while (i < qs.length) { bufs(i).offer(cid, Embedder.dot(qs(i)._2, cemb)); i += 1 }
+                }
+                candAcc.add(rows * qs.length)
+                qs.indices.iterator.map(i => (qs(i)._1, bufs(i).resultIds, bufs(i).resultCos, rows))
+              }
+          else {
+            // INDEXED rescore: probe the maintained bucket index instead
+            // of scanning the corpus. Each (query, row) pair scores
+            // exactly once — in their FIRST shared band (the row's key
+            // prefix rules out earlier shares), so per-partition top-k
+            // slices are disjoint and merge exactly; candidate counts
+            // sum to the true candidate-set size. At the design point
+            // the index is key-partitioned and this pass prunes to the
+            // probed buckets.
+            val bcQKeys = sc.broadcast(rescoreQs.map(q => bcGeom.value.keysOf(q._2)))
+            indexU.get
+              .mapPartitions { it =>
+                val qs = bcQs.value; val qKeys = bcQKeys.value
+                val bufs = Array.fill(qs.length)(new ScoredTopK.TopKBuf(kPrime))
+                val cnts = new Array[Long](qs.length)
+                it.foreach { r =>
+                  var i = 0
+                  while (i < qs.length) {
+                    if (qKeys(i)(r.band) == r.key && !BlockedTopK.sharesBand(qKeys(i), r.prefix)) {
+                      bufs(i).offer(r.id, Embedder.dot(qs(i)._2, r.emb)); cnts(i) += 1
+                    }
+                    i += 1
+                  }
+                }
+                var tot = 0L; cnts.foreach(tot += _); candAcc.add(tot)
+                qs.indices.iterator.map(i =>
+                  (qs(i)._1, bufs(i).resultIds, bufs(i).resultCos, cnts(i)))
+              }
           }
+        partials
           .transform(BlockedTopK.merge(_, kPrime))
           .mapPartitions { it =>
             // one hash map per partition, not a linear bcQs scan per row
             val qEmb = bcQs.value.toMap
-            it.map { case (srcId, ids, cs, corpusRows) =>
-              // complete ⇔ the list covers the whole corpus — same
-              // convention as the bootstrap (corpusArr.length <= kPrime)
-              // and the indexed rescore (cands <= kPrime); the previous
-              // ids.length < kPrime diverged at |corpus| == kPrime
+            it.map { case (srcId, ids, cs, n) =>
+              // complete ⇔ the list covers every row the query could
+              // score (the whole corpus, or its candidate set) — same
+              // convention as the bootstrap (corpusArr.length <= kPrime,
+              // cands <= kPrime); the previous ids.length < kPrime
+              // diverged at |corpus| == kPrime
               Maint(ScoredTopK.finish(srcId, qEmb(srcId), ids, cs, bcSample.value, tau,
-                complete = corpusRows <= kPrime),
-                bcOld.value.getOrElse(srcId, -1L), rescore = true)
-            }
-          }
-      else {
-        // INDEXED rescore: probe the maintained bucket index instead of
-        // scanning the corpus. Each (query, row) pair scores exactly
-        // once — in their FIRST shared band (the row's key prefix rules
-        // out earlier shares), so per-partition top-k slices are
-        // disjoint and merge exactly; candidate counts sum to the true
-        // candidate-set size, giving the completeness bit. At the
-        // design point the index is key-partitioned and this pass
-        // prunes to the probed buckets.
-        val bcQKeys = sc.broadcast(rescoreQs.map(q => bcGeom.value.keysOf(q._2)))
-        indexU.get
-          .mapPartitions { it =>
-            val qs = bcQs.value; val qKeys = bcQKeys.value
-            val bufs = Array.fill(qs.length)(new ScoredTopK.TopKBuf(kPrime))
-            val cnts = new Array[Long](qs.length)
-            it.foreach { r =>
-              var i = 0
-              while (i < qs.length) {
-                if (qKeys(i)(r.band) == r.key && !BlockedTopK.sharesBand(qKeys(i), r.prefix)) {
-                  bufs(i).offer(r.id, Embedder.dot(qs(i)._2, r.emb)); cnts(i) += 1
-                }
-                i += 1
-              }
-            }
-            var tot = 0L; cnts.foreach(tot += _); candAcc.add(tot)
-            qs.indices.iterator.map(i =>
-              (qs(i)._1, bufs(i).resultIds, bufs(i).resultCos, cnts(i)))
-          }
-          .transform(BlockedTopK.merge(_, kPrime))
-          .mapPartitions { it =>
-            val qEmb = bcQs.value.toMap
-            it.map { case (srcId, ids, cs, cands) =>
-              Maint(ScoredTopK.finish(srcId, qEmb(srcId), ids, cs, bcSample.value, tau,
-                complete = cands <= kPrime),
+                complete = n <= kPrime),
                 bcOld.value.getOrElse(srcId, -1L), rescore = true)
             }
           }
@@ -708,7 +600,6 @@ object IncrementalAlign {
     val maintained = phaseA.filter(!_.rescore).unionByName(rescored).persist(lvl)
     val topkU = cut(maintained.map(_.q))
     topkU.count()
-    diag(s"phase B (rescore) done; scored pairs=${candAcc.value}")
 
     // ---- canonicalization maintenance on the accepted-edge diff ----
     val edgeChanges = maintained
@@ -716,13 +607,10 @@ object IncrementalAlign {
       .filter(c => c._2 != c._3).persist(lvl)
     val added = edgeChanges.filter(_._3 >= 0L).map(c => (c._1, c._3)).toDF("a", "b")
     val removed = edgeChanges.filter(_._2 >= 0L).map(c => (c._1, c._2)).toDF("a", "b")
-    diag(s"edge diff built")
     val (assignmentU, changedNodes) = ConnectedComponents.maintainDetailed(
       spark, state.assignment, state.accepted, added, removed)
-    diag(s"CC maintainDetailed returned")
     val assignP = cut(assignmentU)
-    val acceptedU = cut(topkU.filter(_.acceptedDst >= 0L)
-      .map(q => (q.srcId, q.acceptedDst)).toDF("a", "b"))
+    val acceptedU = cut(acceptedOf(spark, topkU))
 
     // ---- canonical-triple maintenance: relabel only where a component
     //      changed; materialize delta triples; drop retracted docs' rows;
@@ -747,13 +635,10 @@ object IncrementalAlign {
     val relabel = triplesU
       .filter(t => bcChangedNodes.value.contains(t.head) ||
         bcChangedNodes.value.contains(t.tail) || bcNewDocs.value.contains(t.docId))
-    diag(s"CC maintain done; changed nodes=${bcChangedNodes.value.size}")
     val canonicalU = cut(keep.unionByName(
-        materialize(spark, relabel, assignP, entsU, dimsBounded))
-      .select(CanonCols.map(col): _*))
+      canonicalOf(relabel, assignP, entsU, dimsBounded)))
     canonicalU.count()
 
-    diag("canonical maintenance done")
     phaseA.unpersist(blocking = false)
     maintained.unpersist(blocking = false)
     edgeChanges.unpersist(blocking = false)

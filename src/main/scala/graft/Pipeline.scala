@@ -6,7 +6,6 @@ import graft.kg._
 import graft.ingest.{DocSynthesizer, SynthConfig}
 import graft.extract.Extraction
 import graft.embed.{Embedder, EmbedderConfig}
-import graft.graph.NeighborAgg
 import graft.align.{GatWeights, MoCoTrainer, MoCoConfig}
 import graft.candidates.{ExactTopK, IvfTopK, LshTopK}
 import graft.canon.ConnectedComponents
@@ -177,15 +176,12 @@ object Pipeline {
     // ---- stage 0: load normalization (DWY lowercase discipline) ----
     // cut: the dictionary is consumed by ~6 downstream subtrees (probe,
     // extraction dict, kgOf, names ×2, auto-path count) — without the
-    // cut each re-runs the load/synthesis map (the incremental twin
-    // IncrementalAlign.initial has always cut here)
+    // cut each re-runs the load/synthesis map
     val ents = graft.util.Lineage.cut(
       if (cfg.lowercaseNames) ents0.map(e => e.copy(name = e.name.toLowerCase))
       else ents0)
 
-    // one bounded probe decides every forced dim-broadcast this run
-    val dimsBounded = cfg.dimBroadcastMaxRows > 0 &&
-      graft.util.BoundedProbe.atMost(ents.toDF(), cfg.dimBroadcastMaxRows)
+    val dimsBounded = Stages.dimsBounded(ents, cfg.dimBroadcastMaxRows)
 
     // ---- stage 1: extraction (checkpointable) ----
     val raw0 = Extraction.rawTriples(spark, docs)
@@ -236,12 +232,7 @@ object Pipeline {
     // the raw embeddings (narrow broadcast join, zero extra shuffles)
     val blocks =
       if (cfg.useSsl) align.SslPath.singletonBlocks(spark, embs, ents, dimsBounded)
-      else {
-        val withSeq = idTriples.map(t => (t, (t.head << 20) ^ t.tail ^ (t.rel << 40)))
-        val edges = NeighborAgg.undirectedEdges(spark, withSeq, ents, dimsBounded)
-        val ordered = NeighborAgg.orderedNeighbors(spark, edges, ents, boundedDims = dimsBounded)
-        NeighborAgg.blocks(spark, ordered, embs, ents, cfg.embed.dim, dimsBounded)
-      }
+      else Stages.blocks(spark, idTriples, ents, embs, cfg.embed.dim, dimsBounded)
 
     def fit(ev: Option[GatWeights => Double]): GatWeights =
       if (cfg.useSsl) align.SslPath.train(spark, blocks, cfg.embed.dim, cfg.moco, ev)
@@ -259,42 +250,10 @@ object Pipeline {
       }
       else align.GatKernel.initWeights(cfg.embed.dim)
         .withNorms(cfg.moco.centerNorm, cfg.moco.neighborNorm)
-    // cut: `encoded` is referenced twice below (union branch + the
-    // anti-join's id projection), and the encode stage has no exchange
-    // of its own for Spark's shuffle-stage reuse to land on once the
-    // broadcast block assembly is in — without the cut the GAT forward
-    // pass over every block ran TWICE per downstream action (round 6;
-    // the incremental twins encodeIds/encodeAll have always cut here)
-    val encoded = graft.util.Lineage.cut(MoCoTrainer.encode(spark, blocks, weights))
-
-    // entities with no triples keep their raw embedding (reference blocks
-    // exist only for entities appearing in triples). The anti-join's
-    // build side is an id-only projection bounded by |ents| — under the
-    // dim gate it broadcasts (a shuffle of the full embedding payload
-    // just to find blockless rows was the alternative plan)
-    val encodedAll = encoded.toDF("id", "emb").unionByName(
-      embs.toDF("id", "emb").join(graft.util.BoundedProbe.dimHint(
-        encoded.toDF("id", "emb2").select("id"), dimsBounded), Seq("id"), "left_anti"))
+    val embById = Stages.encode(spark, blocks, weights, embs, ents, dimsBounded)
 
     // ---- stage 4: candidate top-k join (KG1 queries vs KG2 corpus) ----
-    val kgOf = graft.util.BoundedProbe.dimHint(
-      ents.toDF().select(col("id"), col("kg")), dimsBounded)
-    // lineage cut + compute-once: BOTH candidate sides (q1, c2) read this
-    // — without it the whole upstream (extraction → blocks → GAT encode)
-    // runs twice. CHECKPOINT (not persist) because the candidate stage
-    // runs MANY actions (sample/count/score/merge jobs): a persist
-    // leaves the full upstream in every downstream logical plan, so each
-    // action re-analyzes and AQE re-plans the deep tree (measured multi-
-    // second driver gaps per job at bench scale — the serial floor that
-    // caps small-rung N-vs-4N scaling); the checkpoint's LogicalRDD makes
-    // every candidate-stage plan shallow. Same discipline as
-    // ConnectedComponents.cut: reliable checkpoint when the session has
-    // a checkpoint dir (real cluster — survives executor loss), lazy
-    // localCheckpoint otherwise (single box, where the first candidate
-    // job materializes the blocks and executor loss ≡ JVM loss anyway).
-    val embById = graft.util.Lineage.cut(encodedAll.join(kgOf, "id"))
-    val q1 = embById.filter(col("kg") === 1).select(col("id"), col("emb")).as[Emb]
-    val c2 = embById.filter(col("kg") === 2).select(col("id"), col("emb")).as[Emb]
+    val (q1, c2) = Stages.sides(spark, embById)
     // lazy: the auto decision (and its dictionary count job) runs only
     // when IVF hasn't already claimed the path (round-2 ADVICE)
     lazy val wantLsh = cfg.useLsh.getOrElse {
@@ -337,25 +296,9 @@ object Pipeline {
     val comps = ConnectedComponents.runAuto(spark, acceptedEdges)
 
     // ---- stage 6: materialize canonical (subj, pred, obj) ----
-    // Each dimension (canonMap, names) joins TWICE — via aliases over
-    // the SAME un-projected plan, so the pair of broadcast exchanges
-    // canonicalizes identically and AQE builds each broadcast ONCE
-    // instead of twice (a duplicate exchange costs a job + ~0.5 s of
-    // driver planning gap on the bench VM — tools/JobCount; the serial
-    // floor that Amdahl-caps small-rung N-vs-4N scaling)
-    val canonMap = comps.select(col("node"), col("component"))
-    val names = graft.util.BoundedProbe.dimHint(
-      ents.toDF().select(col("id"), col("name")), dimsBounded)
-    val t = idTriples.toDF().as("t")
-      .join(canonMap.as("ch"), col("t.head") === col("ch.node"), "left")
-      .join(canonMap.as("ct"), col("t.tail") === col("ct.node"), "left")
-      .withColumn("subjId", coalesce(col("ch.component"), col("t.head")))
-      .withColumn("objId", coalesce(col("ct.component"), col("t.tail")))
-      .join(names.as("ns"), col("subjId") === col("ns.id"))
-      .join(names.as("no"), col("objId") === col("no.id"))
-      .select(col("ns.name").as("subj"), concat(lit("rel_"), col("t.rel")).as("pred"),
-        col("no.name").as("obj"),
-        col("subjId"), col("objId"), pmod(col("subjId"), lit(16)).as("bucket"))
+    val t = Stages.canonical(idTriples, comps, ents, dimsBounded)
+      .select(col("subj"), col("pred"), col("obj"), col("subjId"), col("objId"),
+        pmod(col("subjId"), lit(16)).as("bucket"))
     val canonical = cfg.checkpointDir match {
       case Some(dir) =>
         TableIO.computeIfAbsent(spark, s"$dir/triples_canonical", "materialize",

@@ -12,7 +12,7 @@ import graft.embed.Embedder
   * so L2 rank ≡ cosine rank (SURVEY.md §7.5 item 6); we rank by cosine.
   *
   * Two kinds of physical path:
-  *  - [[ExactTopK]]: broadcast corpus + per-partition heap. The parity
+  *  - [[ExactTopK]]: broadcast corpus + per-query top-k buffer. The parity
   *    oracle the recall tests compare against, and the right plan
   *    whenever the corpus fits an executor (≲10^6 × dim floats). No
   *    shuffle at all on the query side.
@@ -44,25 +44,22 @@ object ExactTopK {
     queries.mapPartitions { it =>
       val cs = bc.value
       it.flatMap { q =>
-        // bounded min-heap of size k on score
-        val heap = new scala.collection.mutable.PriorityQueue[(Double, Long)]()(Ordering.by(x => (-x._1, -x._2)))
+        // ranked under ScoredTopK's total order (cos desc, id asc), so
+        // ties do not depend on the corpus collect order
+        val buf = new ScoredTopK.TopKBuf(k)
         var mu = 0.0; var m2 = 0.0; var nSamp = 0L
         var i = 0
         while (i < cs.length) {
           val s = Embedder.dot(q.emb, cs(i).emb)
-          if (heap.size < k) heap.enqueue((s, cs(i).id))
-          else if (s > heap.head._1 || (s == heap.head._1 && cs(i).id < heap.head._2)) {
-            heap.dequeue(); heap.enqueue((s, cs(i).id))
-          }
+          buf.offer(cs(i).id, s)
           if ((i & 15) == 0) { // deterministic negative sample for RSM
             nSamp += 1; val d = s - mu; mu += d / nSamp; m2 += d * (s - mu)
           }
           i += 1
         }
         val sigma = if (nSamp > 1) math.sqrt(m2 / (nSamp - 1)) else 1.0
-        val ranked: Seq[(Double, Long)] = heap.dequeueAll.reverse.toSeq
-        ranked.zipWithIndex.map { case ((s, id), r) =>
-          Candidate(q.id, id, graft.align.MoCoTrainer.rsmScore(s, mu, sigma), r + 1)
+        Iterator.range(0, buf.n).map { r =>
+          Candidate(q.id, buf.ids(r), graft.align.MoCoTrainer.rsmScore(buf.cs(r), mu, sigma), r + 1)
         }
       }
     }

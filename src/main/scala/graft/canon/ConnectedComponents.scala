@@ -87,28 +87,24 @@ object ConnectedComponents {
   /** edges: DataFrame(a LONG, b LONG) undirected.
     * Returns DataFrame(node LONG, component LONG) where component is the
     * minimum node id reachable — for every node appearing in any edge. */
-  def run(spark: SparkSession, edges0: DataFrame, maxIter: Int = 20,
-          verbose: Boolean = false): DataFrame =
+  def run(spark: SparkSession, edges0: DataFrame, maxIter: Int = 20): DataFrame =
     graft.util.JobDesc.withJobDesc(spark, "graft: connected components") {
-      runImpl(spark, edges0, maxIter, verbose)
+      runImpl(spark, edges0, maxIter)
     }
 
-  private def runImpl(spark: SparkSession, edges0: DataFrame, maxIter: Int,
-          verbose: Boolean): DataFrame = {
+  private def runImpl(spark: SparkSession, edges0: DataFrame, maxIter: Int): DataFrame = {
     var edges = cut(edges0.select(col("a").cast("long"), col("b").cast("long"))
       .filter(col("a") =!= col("b")).distinct())
     var prev = checksum(edges)
     var converged = false
     var it = 0
     while (!converged && it < maxIter) {
-      val t0 = System.nanoTime()
       val next = cut(smallStar(largeStar(edges)))
       val cur = checksum(next)
       converged = cur == prev
       prev = cur
       edges = next
       it += 1
-      if (verbose) println(f"[cc] round $it: edges=${cur._1} ${(System.nanoTime() - t0) / 1e9}%.2f s converged=$converged")
     }
     // at convergence every edge is (node > root, root = component min)
     val nodes = edges.select(col("a").as("node"), col("b").as("component"))

@@ -38,10 +38,7 @@ object PipeProfile {
     time("idTriples")(idT.count())
     val embs = graft.embed.Embedder.embedEntities(spark, ents, cfg.embed).cache()
     time("embed")(embs.count())
-    val withSeq = idT.map(t => (t, (t.head << 20) ^ t.tail ^ (t.rel << 40)))
-    val edges = graft.graph.NeighborAgg.undirectedEdges(spark, withSeq, ents)
-    val ordered = graft.graph.NeighborAgg.orderedNeighbors(spark, edges, ents)
-    val blocks = graft.graph.NeighborAgg.blocks(spark, ordered, embs, ents, dim).cache()
+    val blocks = Stages.blocks(spark, idT, ents, embs, dim, boundedDims = true).cache()
     time("neighbor blocks")(blocks.count())
     val w = graft.align.GatKernel.initWeights(dim)
     val enc = graft.align.MoCoTrainer.encode(spark, blocks, w).cache()

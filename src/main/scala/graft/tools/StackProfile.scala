@@ -31,10 +31,7 @@ object StackProfile {
     val raw = graft.extract.Extraction.rawTriples(spark, docs)
     val idT = graft.extract.Extraction.idTriples(spark, raw, ents)
     val embs = graft.embed.Embedder.embedEntities(spark, ents, cfg.embed)
-    val withSeq = idT.map(t => (t, (t.head << 20) ^ t.tail ^ (t.rel << 40)))
-    val edges = graft.graph.NeighborAgg.undirectedEdges(spark, withSeq, ents)
-    val ordered = graft.graph.NeighborAgg.orderedNeighbors(spark, edges, ents)
-    val blocks = graft.graph.NeighborAgg.blocks(spark, ordered, embs, ents, dim)
+    val blocks = graft.Stages.blocks(spark, idT, ents, embs, dim, boundedDims = true)
     val w = graft.align.GatKernel.initWeights(dim)
     val enc = graft.align.MoCoTrainer.encode(spark, blocks, w)
       .toDF("id", "emb").persist()

@@ -165,6 +165,30 @@ class IncrementalSpec extends SparkTestBase {
     assert(inc.topk.count() > s1.topk.count(), "no new queries arrived")
   }
 
+  test("batch pipeline and continuous bootstrap agree: same triples, same exact top-k lists") {
+    val synth = SynthConfig(entitiesPerKg = 40, surfaceNoise = 0.15)
+    val docs = DocSynthesizer.docs(spark, synth)
+    val ents = DocSynthesizer.entities(spark, synth)
+    val k = icfg.topK
+    val batch = Pipeline.run(spark, docs, ents, PipelineConfig(synth = synth, embed = icfg.embed,
+      useLsh = Some(false), useMoco = false, topK = k))
+    assert(batch.candidatePath == "exact")
+    val cont = IncrementalAlign.initial(spark, docs, ents, icfg)
+
+    def triples(ds: Dataset[_]): Set[(Long, Long, Long)] =
+      ds.toDF().select("head", "rel", "tail").as[(Long, Long, Long)].collect().toSet
+    val bt = triples(batch.idTriples)
+    assert(bt.nonEmpty && bt == triples(cont.idTriples))
+
+    val batchLists = batch.alignment.collect().groupBy(_.srcId)
+      .map { case (src, cs) => src -> cs.sortBy(_.rank).map(_.dstId).toSeq }
+    val contLists = cont.topk.collect().map(q => q.srcId -> q.dstIds.take(k).toSeq).toMap
+    assert(contLists.nonEmpty && batchLists.keySet == contLists.keySet)
+    contLists.foreach { case (src, ids) =>
+      assert(ids.length == k && batchLists(src) == ids, s"query $src")
+    }
+  }
+
   test("rescore completeness matches the bootstrap at |corpus| == kPrime (boundary)") {
     // kPrime = 2*topK = 10; entitiesPerKg = 10 puts the KG2 corpus
     // exactly at the boundary where the exact rescore's old

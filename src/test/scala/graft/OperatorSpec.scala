@@ -151,6 +151,21 @@ class OperatorSpec extends SparkTestBase {
     assert(r >= 0.9, s"LSH recall of exact top-1 within its top-5: $r")
   }
 
+  test("ExactTopK ranks cosine ties by ascending id at any corpus order or partitioning") {
+    val v = Array(1f, 0f, 0f, 0f)
+    val q = Seq(Emb(1L, v)).toDS()
+    // five corpus rows tie at cosine 1.0 with the query; id 2 scores 0.6
+    val corpus = Seq(7L, 3L, 5L, 9L, 4L).map(Emb(_, v)) :+ Emb(2L, Array(0.6f, 0.8f, 0f, 0f))
+    val ranking = Seq(3L, 4L, 5L, 7L, 9L, 2L) // (cos desc, id asc)
+    for (k <- Seq(2, 6); rows <- Seq(corpus, corpus.reverse); parts <- Seq(1, 3)) {
+      val got = ExactTopK.topK(spark, q, spark.sparkContext.parallelize(rows, parts).toDS(), k)
+        .collect().sortBy(_.rank)
+      assert(got.map(_.rank).toSeq == (1 to k), s"k=$k parts=$parts")
+      assert(got.map(_.dstId).toSeq == ranking.take(k),
+        s"k=$k parts=$parts order=${rows.map(_.id).mkString(",")}")
+    }
+  }
+
   test("LSH top-k recall@5 >= 0.6 on the adversarial low-entropy fixture") {
     // zh_en-like noise puts aligned pairs nearly as far apart as the
     // bulk spread — a worst case for any blocking scheme; the exact
